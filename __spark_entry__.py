@@ -338,7 +338,6 @@ def q_cdc_rename_column(spark, sf_dir):
         ops.filter(F.col("op") == "mutation").select("k", F.col("v").alias("val"), "n"),
         ops.filter(F.col("op") == "deletion").select("k"),
         epoch_id="r1",
-        n_updates=ops.count(),
     )
     return t.read().select("k", "val", "n")
 
@@ -364,14 +363,13 @@ def q_cdc_drop_column(spark, sf_dir):
         ops.filter(F.col("op") == "mutation").select("k", "n"),
         ops.filter(F.col("op") == "deletion").select("k"),
         epoch_id="d1",
-        n_updates=ops.count(),
     )
     readd = spark.range(300, 310).select(
         F.col("id").alias("k"),
         (F.col("id") * 2).alias("n"),
         F.concat(F.lit("re"), F.col("id")).alias("v"),
     )
-    t.merge(readd, None, epoch_id="d2", n_updates=10)
+    t.merge(readd, None, epoch_id="d2")
     return t.read().select("k", "n", "v")
 
 

@@ -120,7 +120,7 @@ def main() -> None:
         .withColumn("text", F.col("_donor"))
         .drop("_r", "_donor")
     )
-    t.merge(edits, None, epoch_id="edits-1", n_updates=3)
+    t.merge(edits, None, epoch_id="edits-1")
     feed = t.read_changes(v, include_old=True).select(
         key.alias("doc_id"),
         txt.alias("text"),

@@ -52,6 +52,7 @@ from go_dcp_kafka_spark.functions.dedup_text import (
     minhash_band_buckets,
     minhash_signatures,
 )
+from go_dcp_kafka_spark.table import snapshot
 
 _PARAM_KEYS = ("num_hashes", "bands", "shingle_words", "num_parts")
 
@@ -115,9 +116,7 @@ def _write_index(rows: DataFrame, index_dir: str, dynamic: bool = False) -> None
 
 
 def _sidecar_table(spark, path: str, p: dict):
-    from go_dcp_kafka_spark.table.snapshot import SnapshotTable
-
-    return SnapshotTable(
+    return snapshot.SnapshotTable(
         spark, os.path.join(path, "sidecar"), ("doc_id",),
         num_buckets=p.get("sidecar_buckets", 16),
     )
@@ -434,7 +433,6 @@ def probe_near_dups(
     probe_docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_keys_pushdown: int = 1024,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """Near-dup CANDIDATES for ``probe_docs`` against the indexed corpus:
@@ -447,27 +445,28 @@ def probe_near_dups(
 
     ``stats_out``: optional dict filled with the pruning decision
     (no-silent-caps): ``band_key_pushdown`` — whether the probe's band
-    keys stayed under ``max_keys_pushdown`` and reached the row-group scan
-    as an IN predicate (past the cap only the partition filter prunes —
-    correct, but IO inside each probed partition becomes O(partition));
-    ``probed_parts``."""
+    keys stayed under ``snapshot.PUSHDOWN_CAP`` and reached the row-group
+    scan as an IN predicate (past the cap only the partition filter prunes
+    — correct, but IO inside each probed partition becomes O(partition));
+    ``probed_parts``; ``pushdown_cap``."""
     p = _load_params(path)
     pr = _band_rows(
         _fan(probe_docs.select(F.col(id_col).alias("doc_id"), text_col)), text_col, p
     ).localCheckpoint(eager=False)  # avoid re-signing once per use below
     # the partition filter is ALWAYS applied (≤ num_parts values, bounded);
     # the band_key row-group pushdown only for point-poll-sized probes
-    keys = pr.select("part", "band_key").distinct().limit(max_keys_pushdown + 1).collect()
-    if len(keys) <= max_keys_pushdown:
+    cap = snapshot.PUSHDOWN_CAP
+    keys = pr.select("part", "band_key").distinct().limit(cap + 1).collect()
+    if len(keys) <= cap:
         parts = sorted({r["part"] for r in keys})
     else:  # capped sample is incomplete — re-collect parts alone (≤ num_parts rows)
         parts = sorted(r["part"] for r in pr.select("part").distinct().collect())
     if stats_out is not None:
-        stats_out["band_key_pushdown"] = len(keys) <= max_keys_pushdown
+        stats_out["band_key_pushdown"] = len(keys) <= cap
         stats_out["probed_parts"] = len(parts)
-        stats_out["pushdown_cap"] = max_keys_pushdown
+        stats_out["pushdown_cap"] = cap
     index = _read_index(spark, os.path.join(path, "index"), p).filter(F.col("part").isin(parts))
-    if len(keys) <= max_keys_pushdown:
+    if len(keys) <= cap:
         index = index.filter(F.col("band_key").isin(sorted({r["band_key"] for r in keys})))
     probe_side = pr.select(
         F.col("doc_id").alias("probe_id"), "band_id", "band_key"

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from go_dcp_kafka_spark.table import snapshot
+
 
 def dot_expr(a: Column | str, b: Column | str) -> Column:
     a = F.col(a) if isinstance(a, str) else a
@@ -410,13 +412,14 @@ def update_ivf(
 
     corpus = spark.read.parquet(corpus_dir)
     # old-cell lookup: a column-pruned (id, cell) scan semi-joined with the
-    # broadcast changed-id set. For point-poll-sized change sets (≤1024 ids,
-    # the read_keys cap) the ids are ALSO pushed as an IN predicate so the
-    # id-sorted row-group stats materialize_ivf lays down skip everything
-    # but the matching row groups — O(changed), not O(corpus id column)
+    # broadcast changed-id set. For point-poll-sized change sets (at most
+    # snapshot.PUSHDOWN_CAP ids, the read_keys cap) the ids are ALSO pushed
+    # as an IN predicate so the id-sorted row-group stats materialize_ivf
+    # lays down skip everything but the matching row groups — O(changed),
+    # not O(corpus id column)
     id_cell = corpus.select(id_col, "cell")
-    probe = changed_ids.limit(1025).collect()
-    if len(probe) <= 1024:
+    probe = changed_ids.limit(snapshot.PUSHDOWN_CAP + 1).collect()
+    if len(probe) <= snapshot.PUSHDOWN_CAP:
         vals = sorted({r[id_col] for r in probe if r[id_col] is not None})
         if vals:
             id_cell = id_cell.filter(F.col(id_col).isin(vals))

@@ -11,6 +11,10 @@ set-oriented fold equal to the sequential fold:
 2. **HWM dedup** (T6): events with seqno <= the committed per-partition
    high-watermark are duplicate deliveries (rebalance replay,
    /root/reference/kafka/producer/producer_batch.go:68-75) and are dropped.
+   ``hwm_filter`` is the engine's one dedup path: the streaming runner
+   joins each epoch against the committed watermark map, shipped from the
+   driver as a local frame. The batch fold needs no HWM (see
+   ``fold_change_events``).
 3. **LWW per key**: among surviving events of one (conv_id, turn_idx) key,
    the winner is max(seqno, delivery_seq). Valid because a key lives in
    exactly one partition (vbucket hashing) and DCP delivers per-partition in
@@ -70,7 +74,10 @@ def hwm_filter(events: DataFrame, hwm: DataFrame) -> DataFrame:
     """Drop duplicate deliveries: events at-or-below the committed
     per-partition high-watermark. ``hwm`` is (partition_id, hwm_seqno) —
     at most one row per partition (<= 1024 rows at reference scale:
-    Couchbase has 1024 vbuckets) -> broadcast join."""
+    Couchbase has 1024 vbuckets) -> broadcast join. The runner builds it
+    on the driver from the checkpoint map (``runner._driver_frame``), so
+    the broadcast side is a local scan; partitions absent from it have
+    seen nothing yet and keep every event."""
     return (
         events.join(
             F.broadcast(hwm.select("partition_id", "hwm_seqno")),

@@ -6,9 +6,18 @@ route -> batch -> Kafka write -> checkpoint commit
 
 Ours, per micro-batch (foreachBatch):
 
-    rollback truncation -> HWM dedup -> mapper (vectorized) -> validation
-    -> LWW winners -> route -> salted MERGE into table(s)
-    -> checkpoint upsert (dirty-only) -> lineage append
+    epoch stats vs the committed HWM -> rollback truncation -> HWM dedup
+    -> mapper (vectorized) -> validation -> LWW winners -> route
+    -> salted MERGE into table(s) -> checkpoint upsert (dirty-only)
+    -> lineage append
+
+There is one HWM-dedup path. The committed watermark is a driver-side
+per-partition map (the reference's per-vbucket checkpoint map,
+kafka/metadata/kafka_metadata.go), shipped to the JVM as a local Arrow
+frame. One stats job joins the batch against it (lineage counts plus the
+epoch's rollback markers); ``hwm_filter`` then drops the duplicates with
+the same broadcast join. A rollback epoch lowers the map to the rollback
+points and re-runs the stats job over the surviving rows.
 
 Commit ordering preserves the reference's invariant — durable sink write
 STRICTLY BEFORE checkpoint commit (producer_batch.go:115 then :143) — and
@@ -27,9 +36,11 @@ import time
 from collections.abc import Callable
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from go_dcp_kafka_spark.operators.fold import (
     apply_rollbacks,
@@ -38,8 +49,11 @@ from go_dcp_kafka_spark.operators.fold import (
     lww_winners,
 )
 from go_dcp_kafka_spark.schema import (
+    CHECKPOINT_SCHEMA,
     CORRUPT_COL,
     KEY_COLS,
+    OP_DELETION,
+    OP_EXPIRATION,
     OP_MUTATION,
     OP_ROLLBACK,
     PAYLOAD_COLS,
@@ -74,6 +88,64 @@ REJECTION_SCHEMA = T.StructType(
         T.StructField("commit_epoch_key", T.StringType()),
     ]
 )
+
+
+#: The committed watermark as the epoch joins it: (partition_id, hwm_seqno),
+#: typed as the checkpoint store keeps it.
+HWM_SCHEMA = T.StructType([CHECKPOINT_SCHEMA["partition_id"], CHECKPOINT_SCHEMA["hwm_seqno"]])
+#: Rollback control rows in the shape ``apply_rollbacks`` joins.
+_MARKER_SCHEMA = T.StructType(
+    [
+        T.StructField("rb_partition_id", T.IntegerType()),
+        T.StructField("rb_point", T.LongType()),
+        T.StructField("rb_delivery", T.LongType()),
+    ]
+)
+
+
+def _driver_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A small frame of driver-side rows (the watermark map, the rollback
+    markers), shipped as one Arrow table: the plan is a ``LocalTableScan``.
+    A frame built from a Python list is a Python-RDD scan instead, which
+    forks ``pyspark.daemon`` workers on every epoch."""
+    table = pa.Table.from_pandas(
+        pd.DataFrame(rows, columns=schema.names), schema=to_arrow_schema(schema), preserve_index=False
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _epoch_stats(df: DataFrame, hwm_frame: DataFrame) -> pd.DataFrame:
+    """Per-partition lineage stats of ``df`` against the watermark, in ONE
+    job: duplicates dropped (seqno at or below the HWM), the fresh seqno
+    range and fresh counts per op. The rollback markers ride along as
+    (rb_point, rb_delivery) structs — a handful per partition — so the
+    rollback path never re-scans the batch to find them."""
+    is_rb = F.col("op") == OP_ROLLBACK
+    is_fresh = (~is_rb) & (F.col("seqno") > F.coalesce(F.col("hwm_seqno"), F.lit(-1)))
+    n_fresh = {"n_mutations": OP_MUTATION, "n_deletions": OP_DELETION, "n_expirations": OP_EXPIRATION}
+    return (
+        df.join(F.broadcast(hwm_frame), "partition_id", "left")
+        .groupBy("partition_id")
+        .agg(
+            F.collect_list(
+                F.when(
+                    is_rb,
+                    F.struct(
+                        F.col("rollback_point").alias("rb_point"),
+                        F.col("delivery_seq").alias("rb_delivery"),
+                    ),
+                )
+            ).alias("rb_markers"),
+            F.sum(F.when(~is_rb & ~is_fresh, 1).otherwise(0)).alias("n_duplicates_dropped"),
+            F.min(F.when(is_fresh, F.col("seqno"))).alias("first_seqno"),
+            F.max(F.when(is_fresh, F.col("seqno"))).alias("last_seqno"),
+            *[
+                F.sum(F.when(is_fresh & (F.col("op") == op), 1).otherwise(0)).alias(name)
+                for name, op in n_fresh.items()
+            ],
+        )
+        .toPandas()
+    )
 
 
 def _dlq_dir_name(epoch_key: str, stage: str) -> str:
@@ -250,110 +322,31 @@ class CdcPipeline:
                     "decode",
                 )
                 batch_df = batch_df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-            # ---- committed HWM state (driver-side map, <=1024 partitions) -
-            hwm0 = self.checkpoints.hwm_map()
-
-            def _hwm_df(mapping: dict[int, int]):
-                return spark.createDataFrame(
-                    [(int(p), int(v)) for p, v in mapping.items()] or [(-(2**31), -1)],
-                    T.StructType(
-                        [
-                            T.StructField("partition_id", T.IntegerType()),
-                            T.StructField("hwm_seqno", T.LongType()),
-                        ]
-                    ),
-                )
-
-            # ---- ONE pass over the batch: rollback-marker detection fused
-            # with lineage stats (duplicates counted vs committed HWM) ------
-            is_rb = F.col("op") == OP_ROLLBACK
-            is_fresh = (~is_rb) & (F.col("seqno") > F.coalesce(F.col("hwm_seqno"), F.lit(-1)))
-            annotated = batch_df.join(F.broadcast(_hwm_df(hwm0)), "partition_id", "left")
-            stats_pd = (
-                annotated.groupBy("partition_id")
-                .agg(
-                    F.sum(F.when(is_rb, 1).otherwise(0)).alias("n_rollbacks"),
-                    F.min(F.when(is_rb, F.col("rollback_point"))).alias("rb_point"),
-                    # full marker rows ride along in the SAME job (tiny —
-                    # a handful per partition): the rollback path below
-                    # never re-scans the batch to find them
-                    F.collect_list(
-                        F.when(
-                            is_rb,
-                            F.struct(
-                                F.col("rollback_point").alias("rb_point"),
-                                F.col("delivery_seq").alias("rb_delivery"),
-                            ),
-                        )
-                    ).alias("rb_markers"),
-                    F.sum(F.when(~is_rb & ~is_fresh, 1).otherwise(0)).alias("n_duplicates_dropped"),
-                    F.min(F.when(is_fresh, F.col("seqno"))).alias("first_seqno"),
-                    F.max(F.when(is_fresh, F.col("seqno"))).alias("last_seqno"),
-                    F.sum(F.when(is_fresh & (F.col("op") == "mutation"), 1).otherwise(0)).alias("n_mutations"),
-                    F.sum(F.when(is_fresh & (F.col("op") == "deletion"), 1).otherwise(0)).alias("n_deletions"),
-                    F.sum(F.when(is_fresh & (F.col("op") == "expiration"), 1).otherwise(0)).alias("n_expirations"),
-                )
-                .toPandas()
-            )
-
+            # ---- committed HWM state: the driver-side checkpoint map, one
+            # row per partition (<=1024 at reference scale) ----------------
+            hwm = self.checkpoints.hwm_map()
+            hwm_frame = _driver_frame(spark, list(hwm.items()), HWM_SCHEMA)
+            stats_pd = _epoch_stats(batch_df, hwm_frame)
             t_stats_done = time.time()
-            eff = dict(hwm0)
-            marker_rows: list[tuple[int, int]] = []
-            if int(stats_pd["n_rollbacks"].sum()) > 0:
+            markers = [
+                (int(p), int(m["rb_point"]), int(m["rb_delivery"]))
+                for p, rb_ms in zip(stats_pd["partition_id"], stats_pd["rb_markers"])
+                for m in rb_ms
+            ]
+            if markers:
                 # ---- rollback truncation (T5): the rare, precise path -----
-                # marker rows came back WITH the stats job (rb_markers) —
-                # no second scan of the batch to extract them
-                full_markers: list[tuple[int, int, int]] = []
-                for _, srow in stats_pd.iterrows():
-                    rb_ms = srow["rb_markers"]
-                    for m in (rb_ms if rb_ms is not None else []):
-                        full_markers.append(
-                            (int(srow["partition_id"]), int(m["rb_point"]), int(m["rb_delivery"]))
-                        )
-                marker_rows = [(p, rbp) for p, rbp, _ in full_markers]
-                for p, rbp in marker_rows:
-                    eff[p] = min(eff.get(p, -1), rbp)
-                markers = spark.createDataFrame(
-                    full_markers,
-                    T.StructType(
-                        [
-                            T.StructField("rb_partition_id", T.IntegerType()),
-                            T.StructField("rb_point", T.LongType()),
-                            T.StructField("rb_delivery", T.LongType()),
-                        ]
-                    ),
-                )
-                live = apply_rollbacks(batch_df, markers)
-                # recompute stats for the affected partitions only
-                mparts = sorted({p for p, _ in marker_rows})
-                is_fresh2 = F.col("seqno") > F.coalesce(F.col("hwm_seqno"), F.lit(-1))
-                redo = (
-                    live.filter(F.col("partition_id").isin(mparts))
-                    .join(F.broadcast(_hwm_df(eff)), "partition_id", "left")
-                    .groupBy("partition_id")
-                    .agg(
-                        F.sum(F.when(~is_fresh2, 1).otherwise(0)).alias("n_duplicates_dropped"),
-                        F.min(F.when(is_fresh2, F.col("seqno"))).alias("first_seqno"),
-                        F.max(F.when(is_fresh2, F.col("seqno"))).alias("last_seqno"),
-                        F.sum(F.when(is_fresh2 & (F.col("op") == "mutation"), 1).otherwise(0)).alias("n_mutations"),
-                        F.sum(F.when(is_fresh2 & (F.col("op") == "deletion"), 1).otherwise(0)).alias("n_deletions"),
-                        F.sum(F.when(is_fresh2 & (F.col("op") == "expiration"), 1).otherwise(0)).alias("n_expirations"),
-                    )
-                    .toPandas()
-                )
-                keep = stats_pd[~stats_pd["partition_id"].isin(mparts)]
-                redo["n_rollbacks"] = 1
-                rb_min: dict[int, int] = {}
-                for p, rbp in marker_rows:
-                    rb_min[p] = min(rb_min.get(p, rbp), rbp)
-                redo["rb_point"] = redo["partition_id"].map(rb_min)
-                stats_pd = pd.concat([keep, redo], ignore_index=True)
+                # the HWM drops to the rollback point, and the stats are
+                # recounted over the rows that survive truncation
+                for p, rbp, _ in markers:
+                    hwm[p] = min(hwm.get(p, -1), rbp)
+                live = apply_rollbacks(batch_df, _driver_frame(spark, markers, _MARKER_SCHEMA))
+                hwm_frame = _driver_frame(spark, list(hwm.items()), HWM_SCHEMA)
+                stats_pd = _epoch_stats(live, hwm_frame)
             else:
                 live = batch_df.filter(F.col("op") != OP_ROLLBACK)
-
-            stats_pd = stats_pd.drop(columns=["n_rollbacks", "rb_point", "rb_markers"], errors="ignore")
-            hwm_df = _hwm_df(eff)
-            fresh = hwm_filter(live, hwm_df)
+            t_rollback_done = time.time()
+            stats_pd = stats_pd.drop(columns="rb_markers")
+            fresh = hwm_filter(live, hwm_frame)
 
             # ---- mapper surface (P1) + validation/dead-letter (S7) --------
             # one tagged pass for every per-row guard (validation precedence
@@ -396,13 +389,8 @@ class CdcPipeline:
                 mapped = tagged.filter(F.col("_err_class").isNull()).drop("_err_class")
 
             # ---- route (P4) + LWW + MERGE (S3) ----------------------------
-            # upper bound on update keys (pre-LWW fresh count) — drives the
-            # merge's broadcast decision without an extra counting job
-            n_upper = int(
-                stats_pd[["n_mutations", "n_deletions", "n_expirations"]].sum().sum()
-            )
             t_merge = time.time()
-            n_merged = self._merge_routed(mapped, epoch_key, n_upper)
+            n_merged = self._merge_routed(mapped, epoch_key)
             t_merge_done = time.time()
             if self.metrics is not None:
                 from go_dcp_kafka_spark.streaming.metrics import BATCH_PRODUCE_LATENCY_MS
@@ -416,8 +404,8 @@ class CdcPipeline:
                     for r in stats_pd.itertuples()
                     if pd.notna(r.last_seqno)
                 }
-                for p, _ in marker_rows:
-                    dirty.setdefault(int(p), eff[int(p)])
+                for p, _, _ in markers:
+                    dirty.setdefault(p, hwm[p])
                 if dirty:
                     dirty_pd = pd.DataFrame(
                         {"partition_id": list(dirty), "hwm_seqno": list(dirty.values())}
@@ -462,7 +450,8 @@ class CdcPipeline:
                 "n_rejected": dict(self._epoch_rejects),
                 "phase_ms": {
                     "stats": int((t_stats_done - t0) * 1000),
-                    "mapper_guards": int((t_merge - t_stats_done) * 1000),
+                    "rollback": int((t_rollback_done - t_stats_done) * 1000),
+                    "mapper_guards": int((t_merge - t_rollback_done) * 1000),
                     "merge": int((t_merge_done - t_merge) * 1000),
                     "checkpoint_lineage": int((now - t_merge_done) * 1000),
                     "total": int((now - t0) * 1000),
@@ -474,7 +463,7 @@ class CdcPipeline:
             if self.cache_batch:
                 batch_df.unpersist()
 
-    def _merge_routed(self, mapped: DataFrame, epoch_key: str, n_upper: int | None = None) -> int:
+    def _merge_routed(self, mapped: DataFrame, epoch_key: str) -> int:
         """Split by routing target and MERGE each. Missing mapping: the
         reference panics (connector.go:132-138); we dead-letter (or raise
         with strict_routing=True)."""
@@ -503,13 +492,12 @@ class CdcPipeline:
                 deletes = winners.filter(F.col("op") != OP_MUTATION).select(*KEY_COLS)
                 ek = epoch_key if len(self.tables) == 1 else f"{epoch_key}@{name}"
                 merge_fn = table.merge_mor if mode == "mor" else table.merge
-                res = merge_fn(upserts, deletes, epoch_id=ek, n_updates=n_upper)
+                res = merge_fn(upserts, deletes, epoch_id=ek)
                 if not res.get("skipped"):
                     # merged-key count comes back from the merge itself (COW:
                     # fused into the touched-bucket job; MOR: parquet footer
                     # metadata) — no extra count job per epoch
-                    n = res.get("n_upserts")
-                    total += int(n) if n is not None else winners.count()
+                    total += int(res["n_upserts"])
                 if mode == "mor" and (self.compact_every or self.compact_delta_bytes):
                     n_since = self._epochs_since_compact.get(name, 0) + 1
                     due_count = bool(self.compact_every) and n_since >= self.compact_every

@@ -131,6 +131,12 @@ _BROADCAST_KEY_BYTES = 64 << 20
 #: variable-width types, bytes alone under-counts fat string keys; 500k rows
 #: of even-1KB keys is ~500MB — beyond this, leave the join choice to AQE
 _BROADCAST_KEY_MAX_ROWS = 500_000
+#: IN-pushdown cap for point-poll-sized probe sets (``read_keys``, the
+#: changes feed's old-side scan, the IVF and MinHash index probes): at or
+#: under it the probe's key values reach the parquet row-group scan as an
+#: IN predicate; past it only the bucket/partition filter prunes.
+#: ``stats_out["pushdown_cap"]`` reports it.
+PUSHDOWN_CAP = 1024
 
 #: Conservative serialized-width estimate per Spark type (bytes per value);
 #: unlisted types (string, binary, arrays) assume 64.
@@ -160,18 +166,14 @@ def _est_row_bytes(schema: T.StructType) -> int:
     return sum(_TYPE_BYTES.get(f.dataType.typeName(), 64) for f in schema.fields)
 
 
-def _should_broadcast_keys(schema: T.StructType, n_updates: int | None) -> bool:
-    """True when the epoch's update-key set fits the forced-broadcast byte
-    budget (estimated as rows × per-row type-width sum). Variable-width
+def _should_broadcast_keys(schema: T.StructType, n_keys: int) -> bool:
+    """True when the epoch's ``n_keys`` update keys fit the forced-broadcast
+    byte budget (estimated as rows × per-row type-width sum). Variable-width
     columns (string/binary/array) estimate at a flat 64 bytes, which a
     multi-KB key blows through — so the budget is ALSO capped by row count
     (ADVICE r4): 1M × even-4KB keys would be a 4GB 'broadcast'. Past the
     cap, let AQE decide from actual runtime sizes."""
-    if n_updates is None:
-        return False
-    if n_updates > _BROADCAST_KEY_MAX_ROWS:
-        return False
-    return n_updates * _est_row_bytes(schema) <= _BROADCAST_KEY_BYTES
+    return n_keys <= _BROADCAST_KEY_MAX_ROWS and n_keys * _est_row_bytes(schema) <= _BROADCAST_KEY_BYTES
 
 
 def _bucket_expr(key_cols: tuple[str, ...], num_buckets: int):
@@ -737,7 +739,7 @@ class SnapshotTable:
 
         ``stats_out``: optional dict the call fills with its pruning
         decisions (no-silent-caps rule, r5 verdict item 8):
-        ``key_pushdown`` — whether the probe stayed under the 1024-key cap
+        ``key_pushdown`` — whether the probe stayed under ``PUSHDOWN_CAP``
         so key VALUES reached the parquet row-group scan as an IN predicate
         (past the cap only the bucket filter prunes — correct, but IO
         inside each probed bucket becomes O(bucket), a quiet cliff worth
@@ -749,19 +751,19 @@ class SnapshotTable:
         # small probe sets (the point-lookup case) come back whole so the
         # key values can be pushed down; past the cap only the bucket ids
         # are collected (still bounded by num_buckets)
-        probe_rows = kdf.withColumn("_b", bexpr).limit(1025).collect()
-        if len(probe_rows) > 1024:
+        probe_rows = kdf.withColumn("_b", bexpr).limit(PUSHDOWN_CAP + 1).collect()
+        if len(probe_rows) > PUSHDOWN_CAP:
             probed = sorted(r["_b"] for r in kdf.select(bexpr.alias("_b")).distinct().collect())
         else:
             probed = sorted({r["_b"] for r in probe_rows})
         if stats_out is not None:
-            stats_out["key_pushdown"] = len(probe_rows) <= 1024
+            stats_out["key_pushdown"] = len(probe_rows) <= PUSHDOWN_CAP
             stats_out["probed_buckets"] = len(probed)
-            stats_out["pushdown_cap"] = 1024
+            stats_out["pushdown_cap"] = PUSHDOWN_CAP
         if not probed:  # empty probe set: empty result, zero dirs listed
             return self.read().limit(0)
         state = self._resolve_lww(m, self._delta_entries(m), probed)
-        if len(probe_rows) <= 1024:
+        if len(probe_rows) <= PUSHDOWN_CAP:
             # push the first key column as an IN predicate onto the scans:
             # with sort_within_buckets the parquet row-group min/max stats on
             # that column are selective, so IO inside each probed bucket dir
@@ -796,7 +798,6 @@ class SnapshotTable:
         upserts: DataFrame,
         delete_keys: DataFrame | None,
         epoch_id: str,
-        n_updates: int | None = None,
     ) -> dict[str, Any]:
         """MERGE INTO semantics: rows in ``upserts`` replace target rows with
         the same key (full-document replacement, like a DCP mutation carrying
@@ -823,7 +824,8 @@ class SnapshotTable:
         try:
             # ONE job yields both the touched-bucket set and the update-row
             # count (when inputs are LWW winners, rows == distinct keys ==
-            # the epoch's merged-key count — saves the runner a count job)
+            # the epoch's merged-key count — saves the runner a count job;
+            # the same count sizes the anti-join's key broadcast below)
             bucket_counts = keys.groupBy("_bucket").count().collect()
             touched = sorted(r["_bucket"] for r in bucket_counts)
             n_upserts = int(sum(r["count"] for r in bucket_counts))
@@ -838,7 +840,7 @@ class SnapshotTable:
                 # (no shuffle of the target table). Above the byte budget,
                 # fall back to a shuffled join (AQE may still pick broadcast).
                 join_keys = (
-                    F.broadcast(keys) if _should_broadcast_keys(keys.schema, n_updates) else keys
+                    F.broadcast(keys) if _should_broadcast_keys(keys.schema, n_upserts) else keys
                 )
                 kept = current.withColumn("_bucket", bexpr).join(
                     join_keys, on=[*self.key_cols, "_bucket"], how="left_anti"
@@ -885,7 +887,6 @@ class SnapshotTable:
         upserts: DataFrame,
         delete_keys: DataFrame | None,
         epoch_id: str,
-        n_updates: int | None = None,
     ) -> dict[str, Any]:
         """Merge-on-read: append this epoch's upserts and delete markers as a
         versioned delta — NO read or rewrite of existing data. Readers
@@ -1207,8 +1208,8 @@ class SnapshotTable:
         # point-poll IN pushdown (the read_keys cap): with sorted buckets the
         # old-side scan skips to the probed keys' row groups
         k0 = self.key_cols[0]
-        probe = winners.select(k0).limit(1025).collect()
-        if len(probe) <= 1024:
+        probe = winners.select(k0).limit(PUSHDOWN_CAP + 1).collect()
+        if len(probe) <= PUSHDOWN_CAP:
             vals = sorted({r[k0] for r in probe if r[k0] is not None})
             if vals:
                 old = old.filter(F.col(k0).isin(vals))

@@ -538,7 +538,7 @@ def test_update_ivf_tracks_cdc_changes(spark, tmp_path):
         [(300, [0.9] * 8), (301, [0.0] * 8), (5, [-0.9] * 8)],
         "vec_id long, embedding array<double>",
     )
-    t.merge_mor(ups, spark.createDataFrame([(17,)], "vec_id long"), epoch_id="e1", n_updates=4)
+    t.merge_mor(ups, spark.createDataFrame([(17,)], "vec_id long"), epoch_id="e1")
 
     res = update_ivf(spark, idx, t.read_changes(v1))
     assert res["affected_cells"], res

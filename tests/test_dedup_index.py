@@ -70,7 +70,7 @@ def test_update_minhash_tracks_cdc_changes(spark, tmp_path, corpus_table):
         "doc_id long, text string",
     )
     t.merge_mor(
-        ups, spark.createDataFrame([(7,)], "doc_id long"), epoch_id="e1", n_updates=3
+        ups, spark.createDataFrame([(7,)], "doc_id long"), epoch_id="e1"
     )
     changes = t.read_changes(v1, include_old=True)
 
@@ -121,7 +121,7 @@ def test_update_minhash_without_before_image_uses_sidecar(spark, tmp_path, corpu
         )
         t.merge_mor(
             ups, spark.createDataFrame([(del_id,)], "doc_id long"),
-            epoch_id=f"e{i}", n_updates=3,
+            epoch_id=f"e{i}",
         )
         pre = _part_files(idx)
         changes = t.read_changes(v)  # no include_old
@@ -150,7 +150,7 @@ def test_update_minhash_no_sidecar_falls_back(spark, tmp_path, corpus_table):
 
     ups = spark.createDataFrame([(200, _text(200))], "doc_id long, text string")
     t.merge_mor(
-        ups, spark.createDataFrame([(2,)], "doc_id long"), epoch_id="e1", n_updates=2
+        ups, spark.createDataFrame([(2,)], "doc_id long"), epoch_id="e1"
     )
     changes = t.read_changes(v1)  # no include_old
     res = update_minhash(spark, idx, changes)
@@ -378,7 +378,6 @@ def test_update_after_update_composes(spark, tmp_path, corpus_table):
             ups,
             spark.createDataFrame([(del_id,)], "doc_id long"),
             epoch_id=f"e{i}",
-            n_updates=3,
         )
         res = update_minhash(spark, idx, t.read_changes(v, include_old=True))
         assert res["exact_old_location"] is True
@@ -489,7 +488,6 @@ def test_maintain_exact_dedup_tracks_corpus(spark, tmp_path):
         ),
         spark.createDataFrame([(0,)], "doc_id long"),
         epoch_id="x1",
-        n_updates=3,
     )
     res = maintain_exact_dedup(dt, t, v, epoch_id="dd1")
     assert res["recomputed_groups"] == 1, res
@@ -507,7 +505,6 @@ def test_maintain_exact_dedup_tracks_corpus(spark, tmp_path):
         spark.createDataFrame([(1, _text(1))], "doc_id long, text string"),
         None,
         epoch_id="x2",
-        n_updates=1,
     )
     d = exact_dedup_deltas(t.read_changes(v, include_old=True))
     assert d.count() == 0
@@ -616,7 +613,7 @@ def test_maintain_exact_dedup_reserve_keeper_promotion(spark, tmp_path):
     v = t.version()
     t.merge_mor(
         spark.createDataFrame([], "doc_id long, text string"),
-        spark.createDataFrame([(0,)], "doc_id long"), epoch_id="x1", n_updates=1,
+        spark.createDataFrame([(0,)], "doc_id long"), epoch_id="x1",
     )
     res = maintain_exact_dedup(dt, t, v, epoch_id="dd1", reserve_r=2)
     assert res["recomputed_groups"] == 0, res
@@ -636,7 +633,7 @@ def test_maintain_exact_dedup_reserve_keeper_promotion(spark, tmp_path):
     v = t.version()
     t.merge_mor(
         spark.createDataFrame([], "doc_id long, text string"),
-        spark.createDataFrame([(8,)], "doc_id long"), epoch_id="x3", n_updates=1,
+        spark.createDataFrame([(8,)], "doc_id long"), epoch_id="x3",
     )
     res = maintain_exact_dedup(dt, t, v, epoch_id="dd3", reserve_r=2)
     assert res["recomputed_groups"] == 0, res
@@ -648,14 +645,14 @@ def test_maintain_exact_dedup_reserve_keeper_promotion(spark, tmp_path):
         spark.createDataFrame(
             [(1, _text(2)), (300, _text(3))], "doc_id long, text string"
         ),
-        spark.createDataFrame([(3,), (7,)], "doc_id long"), epoch_id="x4", n_updates=4,
+        spark.createDataFrame([(3,), (7,)], "doc_id long"), epoch_id="x4",
     )
     res = maintain_exact_dedup(dt, t, v, epoch_id="dd4", reserve_r=2)
     assert res["recomputed_groups"] == 0, res
     check("e4")
 
 
-def test_probe_near_dups_pushdown_reported(spark, tmp_path):
+def test_probe_near_dups_pushdown_reported(spark, tmp_path, monkeypatch):
     """No-silent-caps (r5 verdict item 8): probe_near_dups discloses via
     stats_out whether the probe's band keys reached the row-group scan as
     an IN pushdown or only the partition filter pruned (cap exceeded) —
@@ -675,12 +672,16 @@ def test_probe_near_dups_pushdown_reported(spark, tmp_path):
            probe_near_dups(spark, idx, probe, stats_out=stats).collect()}
     assert (999, 10) in got
     assert stats["band_key_pushdown"] is True and stats["probed_parts"] >= 1
-    # force the cap: 1 probe doc emits `bands` keys > max_keys_pushdown=2
-    stats2 = {}
-    got2 = {(r["probe_id"], r["match_id"]) for r in
-            probe_near_dups(spark, idx, probe, max_keys_pushdown=2, stats_out=stats2).collect()}
+    # force the cap: 1 probe doc emits `bands` keys > a cap of 2
+    from go_dcp_kafka_spark.table import snapshot
+
+    with monkeypatch.context() as mp:
+        mp.setattr(snapshot, "PUSHDOWN_CAP", 2)
+        stats2 = {}
+        got2 = {(r["probe_id"], r["match_id"]) for r in
+                probe_near_dups(spark, idx, probe, stats_out=stats2).collect()}
     assert got2 == got, "cap changes IO, never results"
-    assert stats2["band_key_pushdown"] is False
+    assert stats2["band_key_pushdown"] is False and stats2["pushdown_cap"] == 2
     # passes through probe_and_verify
     stats3 = {}
     out = probe_and_verify(spark, idx, probe, t, threshold=0.5, stats_out=stats3)

@@ -56,7 +56,6 @@ def test_read_changes_before_image_both_paths(spark, tmp_path):
         spark.createDataFrame([(1, "g9", 999, "upd")], ["k", "g", "x", "txt"]),
         spark.createDataFrame([(2,)], ["k"]),
         epoch_id="m1",
-        n_updates=2,
     )
     ch = {r["k"]: r for r in t.read_changes(v1, include_old=True).collect()}
     assert ch[1]["_change"] == "update" and ch[1]["_before"]["x"] == 10
@@ -68,7 +67,6 @@ def test_read_changes_before_image_both_paths(spark, tmp_path):
         spark.createDataFrame([(100, "g0", 5, "ins"), (3, "g0", 31, "t3")], ["k", "g", "x", "txt"]),
         None,
         epoch_id="c1",
-        n_updates=2,
     )
     ch2 = {r["k"]: r for r in t.read_changes(v2, include_old=True).collect()}
     assert ch2[100]["_change"] == "insert" and ch2[100]["_before"] is None
@@ -109,7 +107,6 @@ def test_ivm_matches_recompute_across_epochs(spark, tmp_path):
             spark.createDataFrame(ups, ["k", "g", "x", "txt"]),
             spark.createDataFrame([(d,) for d in dels], ["k"]),
             epoch_id=f"e{i}",
-            n_updates=len(ups) + len(dels),
         )
         maintain_agg(base, agg, v, ["g"], ["x"], epoch_id=f"ivm{i}")
         assert _maintained(agg) == _recompute(base), f"diverged after epoch {i}"
@@ -127,7 +124,6 @@ def test_ivm_idempotent_epoch_replay(spark, tmp_path):
         spark.createDataFrame([(1, "g2", 111, "u")], ["k", "g", "x", "txt"]),
         None,
         epoch_id="e1",
-        n_updates=1,
     )
     maintain_agg(base, agg, v, ["g"], ["x"], epoch_id="ivm-replay")
     once = _maintained(agg)
@@ -177,7 +173,7 @@ def test_apply_deltas_reads_only_probed_buckets(spark, tmp_path):
     # many groups so buckets are populated
     rows = [(1000 + i, f"h{i}", i, "t") for i in range(64)]
     base.merge(
-        spark.createDataFrame(rows, ["k", "g", "x", "txt"]), None, epoch_id="wide", n_updates=64
+        spark.createDataFrame(rows, ["k", "g", "x", "txt"]), None, epoch_id="wide"
     )
     agg = SnapshotTable(spark, str(tmp_path / "agg2"), ("g",), num_buckets=8)
     agg.overwrite(
@@ -191,7 +187,6 @@ def test_apply_deltas_reads_only_probed_buckets(spark, tmp_path):
         spark.createDataFrame([(1000, "h0", 555, "u")], ["k", "g", "x", "txt"]),
         None,
         epoch_id="one",
-        n_updates=1,
     )
     d = agg_deltas(base.read_changes(v, include_old=True), ["g"], ["x"]).localCheckpoint(
         eager=True
@@ -296,7 +291,6 @@ def test_ivm_minmax_bounded_recompute(spark, tmp_path):
             spark.createDataFrame(ups, sch),
             spark.createDataFrame([(d,) for d in dels], "k long") if dels else None,
             epoch_id=f"e{i}",
-            n_updates=len(ups) + len(dels),
         )
         res = maintain_agg(
             base, agg, v, ["g"], ["x"], min_cols=["x"], max_cols=["x"], epoch_id=f"mm{i}"
@@ -353,7 +347,7 @@ def test_ivm_minmax_insert_only_skips_flag_machinery(spark, tmp_path, monkeypatc
     v = base.version()
     base.merge_mor(
         spark.createDataFrame([(500, "g0", 7, "i"), (501, "g9", 3, "i")], "k long, g string, x long, txt string"),
-        None, epoch_id="fp0", n_updates=2,
+        None, epoch_id="fp0",
     )
     r = maintain_agg(base, agg, v, ["g"], ["x"], min_cols=["x"], max_cols=["x"], epoch_id="fpm0")
     assert r["recomputed_groups"] == 0
@@ -366,7 +360,6 @@ def test_ivm_minmax_insert_only_skips_flag_machinery(spark, tmp_path, monkeypatc
         spark.createDataFrame([], "k long, g string, x long, txt string"),
         spark.createDataFrame([(501,)], "k long"),
         epoch_id="fp1",
-        n_updates=1,
     )
     r = maintain_agg(base, agg, v, ["g"], ["x"], min_cols=["x"], max_cols=["x"], epoch_id="fpm1")
     assert len(calls) == 1, "retraction epoch must pin the flag frame for the flag count"
@@ -433,7 +426,6 @@ def test_ivm_minmax_property_random_epochs(spark, tmp_path_factory, eps):
             ),
             spark.createDataFrame([(d,) for d in dels], "k long") if dels else None,
             epoch_id=f"e{i}",
-            n_updates=len(ups) + len(dels),
         )
         maintain_agg(base, agg, v, ["g"], ["x"], min_cols=["x"], max_cols=["x"], epoch_id=f"m{i}")
         assert _mm_state(agg.read()) == _mm_state(_mm_scratch(base)), f"diverged at epoch {i}: {eps}"
@@ -488,7 +480,6 @@ def test_maintain_vocab_equals_rebuild(spark, tmp_path):
         ),
         spark.createDataFrame([(2,)], "doc_id long"),
         epoch_id="d1",
-        n_updates=3,
     )
     feed = docs.read_changes(from_version=v, include_old=True)
     dwords = {r["word"]: r["_d_count"] for r in vocab_deltas(feed).collect()}
@@ -577,7 +568,6 @@ def test_vocab_property_random_epochs(spark, tmp_path_factory, eps):
             spark.createDataFrame(ups, "doc_id long, text string"),
             spark.createDataFrame([(d,) for d in dels], "doc_id long") if dels else None,
             epoch_id=f"e{i}",
-            n_updates=len(ups) + len(dels),
         )
         maintain_vocab(vocab, docs, v, epoch_id=f"m{i}")
         got = {r["word"]: r["df"] for r in vocab.read().collect()}
@@ -627,7 +617,6 @@ def test_ivm_reserve_absorbs_extremum_deletions(spark, tmp_path):
             spark.createDataFrame(ups, "k long, g string, x long, txt string"),
             spark.createDataFrame([(d,) for d in dels], "k long") if dels else None,
             epoch_id=f"e{i}",
-            n_updates=len(ups) + len(dels),
         )
         r = maintain_agg(
             base, agg, v, ["g"], min_cols=["x"], max_cols=["x"],
@@ -676,7 +665,7 @@ def test_ivm_reserve_probe_pushdown_reported(spark, tmp_path):
     v = base.version()
     base.merge_mor(
         spark.createDataFrame([(1, "g1", 999, "u")], "k long, g string, x long, txt string"),
-        None, epoch_id="e1", n_updates=1,
+        None, epoch_id="e1",
     )
     r = maintain_agg(base, agg, v, ["g"], ["x"], epoch_id="m1")
     assert r["probe_key_pushdown"] is True and r["probe_buckets"] <= 2
@@ -687,7 +676,7 @@ def test_ivm_reserve_probe_pushdown_reported(spark, tmp_path):
             [(i, f"g{i}", i + 1, "u") for i in range(1100)],
             "k long, g string, x long, txt string",
         ),
-        None, epoch_id="e2", n_updates=1100,
+        None, epoch_id="e2",
     )
     r = maintain_agg(base, agg, v, ["g"], ["x"], epoch_id="m2")
     assert r["probe_key_pushdown"] is False
@@ -730,7 +719,6 @@ def test_ivm_reserve_property_random_epochs(spark, tmp_path_factory, eps):
             ),
             spark.createDataFrame([(d,) for d in dels], "k long") if dels else None,
             epoch_id=f"e{i}",
-            n_updates=len(ups) + len(dels),
         )
         maintain_agg(
             base, agg, v, ["g"], ["x"], min_cols=["x"], max_cols=["x"],

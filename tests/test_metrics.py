@@ -127,7 +127,7 @@ def test_rejection_and_ivm_gauges_in_prometheus_text(spark, log_dir, tmp_path):
     v = base.version()
     base.merge_mor(
         spark.createDataFrame([], "k long, g string, x long, txt string"),
-        spark.createDataFrame([(0,)], "k long"), epoch_id="e1", n_updates=1,
+        spark.createDataFrame([(0,)], "k long"), epoch_id="e1",
     )
     r = maintain_agg(base, agg, v, ["g"], min_cols=["x"], epoch_id="m1", metrics=reg)
     assert r["recomputed_groups"] == 1

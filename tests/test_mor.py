@@ -39,7 +39,7 @@ def test_cow_over_mor_deltas_autocompacts(spark, gen_result, log_info, tmp_path)
     before = pipe.read_table().toPandas()
     # a COW merge on top of outstanding deltas: upsert one row
     one = pipe.read_table().limit(1).withColumn("text", F.lit("cow-upsert"))
-    tbl.merge(one, None, epoch_id="mix-extra", n_updates=1)
+    tbl.merge(one, None, epoch_id="mix-extra")
     assert tbl._load_manifest()["deltas"] == []  # auto-compacted
     after = pipe.read_table().toPandas()
     assert len(after) == len(before)
@@ -87,7 +87,7 @@ def test_mor_read_passthrough_handles_schema_evolution(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=8)
     t.overwrite(spark.createDataFrame([(i, f"v{i}") for i in range(100)], ["k", "v"]), epoch_id="b0")
     evolved = spark.createDataFrame([(3, "new3", "extra")], ["k", "v", "w"])
-    t.merge_mor(evolved, None, epoch_id="d1", n_updates=1)
+    t.merge_mor(evolved, None, epoch_id="d1")
     got = {r["k"]: (r["v"], r["w"]) for r in t.read().collect()}
     assert len(got) == 100
     assert got[3] == ("new3", "extra")
@@ -106,7 +106,7 @@ def test_compact_is_bucket_local(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=8)
     t.overwrite(spark.createDataFrame([(i, f"v{i}") for i in range(400)], ["k", "v"]), epoch_id="b0")
     before = dict(t._load_manifest()["buckets"])
-    t.merge_mor(spark.createDataFrame([(7, "new")], ["k", "v"]), None, epoch_id="d1", n_updates=1)
+    t.merge_mor(spark.createDataFrame([(7, "new")], ["k", "v"]), None, epoch_id="d1")
     res = t.compact()
     assert res["compacted"] and len(res["touched_buckets"]) < 8
     after = t._load_manifest()
@@ -171,7 +171,7 @@ def test_type_widening_int_to_long(spark, tmp_path):
             T.StructField("f", T.DoubleType()),
         ]),
     )
-    t.merge_mor(wide, None, epoch_id="d1", n_updates=1)
+    t.merge_mor(wide, None, epoch_id="d1")
     out = t.read()
     types = dict(out.dtypes)
     assert types["x"] == "bigint" and types["f"] == "double", types
@@ -199,8 +199,8 @@ def test_legacy_string_delta_entries_resolve_in_append_order(spark, tmp_path):
 
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=4)
     t.overwrite(spark.createDataFrame([(i, f"v{i}") for i in range(20)], ["k", "v"]), epoch_id="b0")
-    t.merge_mor(spark.createDataFrame([(3, "n3")], ["k", "v"]), None, epoch_id="d1", n_updates=1)
-    t.merge_mor(spark.createDataFrame([(3, "n3b"), (4, "n4")], ["k", "v"]), None, epoch_id="d2", n_updates=2)
+    t.merge_mor(spark.createDataFrame([(3, "n3")], ["k", "v"]), None, epoch_id="d1")
+    t.merge_mor(spark.createDataFrame([(3, "n3b"), (4, "n4")], ["k", "v"]), None, epoch_id="d2")
     m = t._load_manifest()
     m["deltas"] = [e["dir"] for e in m["deltas"]]  # simulate the legacy format
     vf = t._vfile(m["version"])
@@ -236,11 +236,11 @@ def test_partial_compaction_per_bucket_threshold(spark, tmp_path):
 
     t.merge_mor(
         spark.createDataFrame([(k, f"hot{k}" * 50) for k in hot_keys], ["k", "v"]),
-        None, epoch_id="d1", n_updates=len(hot_keys),
+        None, epoch_id="d1",
     )
     t.merge_mor(
         spark.createDataFrame([(cold_key, "cold")], ["k", "v"]),
-        None, epoch_id="d2", n_updates=1,
+        None, epoch_id="d2",
     )
     before = t.delta_stats()
     assert before["n_deltas"] == 2 and before["bytes"] > 0

@@ -84,13 +84,13 @@ def test_expire_prunes_epoch_entries_and_orphans(spark, tmp_path):
     t = _mk(spark, tmp_path, epoch_retention=64)
     df = spark.createDataFrame([(1, "a")], ["k", "v"])
     for e in range(6):
-        t.merge(df, None, epoch_id=f"s:{e}", n_updates=1)
+        t.merge(df, None, epoch_id=f"s:{e}")
     t.expire_snapshots(keep_last=2)
     m = t._load_manifest()
     # entries below the oldest retained snapshot version are pruned...
     assert all(v >= min(t.versions()) for v in m["committed_epochs"].values())
     # ...but still recognized as committed (watermark)
-    assert t.merge(df, None, epoch_id="s:0", n_updates=1)["skipped"] is True
+    assert t.merge(df, None, epoch_id="s:0")["skipped"] is True
     assert {r["v"] for r in t.read().collect()} == {"a"}
 
 
@@ -117,11 +117,11 @@ def test_occ_conflict_detected_and_retried(spark, tmp_path):
         if fired["n"] == 0:
             fired["n"] += 1
             b.merge(spark.createDataFrame([(2, "from-b")], ["k", "v"]), None,
-                    epoch_id="b:1", n_updates=1)
+                    epoch_id="b:1")
 
     a._pre_commit = inject_b_commit
     res = a.merge(spark.createDataFrame([(1, "from-a")], ["k", "v"]), None,
-                  epoch_id="a:1", n_updates=1)
+                  epoch_id="a:1")
     assert res["skipped"] is False
     assert fired["n"] == 1  # conflict happened exactly once
     state = {r["k"]: r["v"] for r in a.read().collect()}
@@ -150,11 +150,11 @@ def test_occ_exhausted_raises(spark, tmp_path):
 
     def always_conflict():
         counter["n"] += 1
-        b.merge(df, None, epoch_id=f"b:{counter['n']}", n_updates=1)
+        b.merge(df, None, epoch_id=f"b:{counter['n']}")
 
     a._pre_commit = always_conflict
     try:
-        a.merge(df, None, epoch_id="a:1", n_updates=1)
+        a.merge(df, None, epoch_id="a:1")
         raise AssertionError("expected CommitConflictError after retries exhausted")
     except CommitConflictError:
         pass
@@ -164,7 +164,7 @@ def test_occ_exhausted_raises(spark, tmp_path):
 def test_rebucket_preserves_state_and_merges(spark, tmp_path):
     t = _mk(spark, tmp_path)
     rows = [(i, f"v{i}") for i in range(50)]
-    t.merge(spark.createDataFrame(rows, ["k", "v"]), None, epoch_id="e:0", n_updates=50)
+    t.merge(spark.createDataFrame(rows, ["k", "v"]), None, epoch_id="e:0")
     before = {r["k"]: r["v"] for r in t.read().collect()}
     v_before = t.version()
     t.rebucket(16)
@@ -175,7 +175,7 @@ def test_rebucket_preserves_state_and_merges(spark, tmp_path):
     # merges after rebucket route by the NEW bucket fn (incl. a fresh handle)
     t2 = SnapshotTable(spark, str(tmp_path / "t"), ("k",), 4)  # stale ctor hint
     t2.merge(spark.createDataFrame([(1, "NEW"), (99, "n99")], ["k", "v"]), None,
-             epoch_id="e:1", n_updates=2)
+             epoch_id="e:1")
     assert t2.num_buckets == 16  # manifest wins over the ctor hint
     after = {r["k"]: r["v"] for r in t2.read().collect()}
     assert after[1] == "NEW" and after[99] == "n99" and after[2] == "v2"
@@ -195,8 +195,8 @@ def test_crash_between_vfile_and_cache_heals(spark, tmp_path):
     t = _mk(spark, tmp_path)
     df1 = spark.createDataFrame([(1, "v1")], ["k", "v"])
     df2 = spark.createDataFrame([(2, "v2")], ["k", "v"])
-    t.merge(df1, None, epoch_id="s:0", n_updates=1)
-    t.merge(df2, None, epoch_id="s:1", n_updates=1)
+    t.merge(df1, None, epoch_id="s:0")
+    t.merge(df2, None, epoch_id="s:1")
     # simulate the crash window: rewind cache + pointer to v1 while the
     # authoritative v2 file survives
     hist = os.path.join(t.path, "_manifests")
@@ -213,7 +213,7 @@ def test_crash_between_vfile_and_cache_heals(spark, tmp_path):
     assert {r["k"]: r["v"] for r in fresh.read().collect()} == {1: "v1", 2: "v2"}
     # next commit takes v3 (no collision with the orphaned v2)
     res = fresh.merge(spark.createDataFrame([(3, "v3")], ["k", "v"]), None,
-                      epoch_id="s:2", n_updates=1)
+                      epoch_id="s:2")
     assert res["version"] == 3
     # a deleted pointer file is also healed (full probe from 0 still lands)
     os.remove(os.path.join(hist, "_latest"))
@@ -227,7 +227,7 @@ def test_crash_mid_serialization_leaves_no_corrupt_vfile(spark, tmp_path):
     next committer takes that same version. expire GCs the stray."""
     t = _mk(spark, tmp_path)
     t.merge(spark.createDataFrame([(1, "v1")], ["k", "v"]), None,
-            epoch_id="s:0", n_updates=1)
+            epoch_id="s:0")
     hist = os.path.join(t.path, "_manifests")
     # simulate the crash: a half-written tmp for v2 that never got linked
     with open(os.path.join(hist, "v000002.json.tmp.deadbeef"), "w") as f:
@@ -236,7 +236,7 @@ def test_crash_mid_serialization_leaves_no_corrupt_vfile(spark, tmp_path):
     assert fresh._load_manifest()["version"] == 1  # stray tmp is invisible
     assert {r["k"]: r["v"] for r in fresh.read().collect()} == {1: "v1"}
     res = fresh.merge(spark.createDataFrame([(2, "v2")], ["k", "v"]), None,
-                      epoch_id="s:1", n_updates=1)
+                      epoch_id="s:1")
     assert res["version"] == 2  # the crashed attempt's version is reused
     fresh.expire_snapshots(keep_last=2)
     assert not [f for f in os.listdir(hist) if ".tmp." in f]  # stray GC'd
@@ -349,7 +349,7 @@ def test_expire_grace_protects_staged_dirs_but_gcs_expired_snapshots(spark, tmp_
     t = _mk(spark, tmp_path)
     df = spark.createDataFrame([(1, "a")], ["k", "v"])
     for e in range(4):
-        t.merge(df, None, epoch_id=f"s:{e}", n_updates=1)
+        t.merge(df, None, epoch_id=f"s:{e}")
     data_root = os.path.join(t.path, "data")
     before = set(os.listdir(data_root))
     # simulate a concurrent writer's freshly staged (uncommitted) dir
@@ -384,7 +384,7 @@ def test_lost_latest_pointer_with_expired_v1_heals_by_rescan(spark, tmp_path):
     for i in range(5):
         t.merge(
             spark.createDataFrame([(i, f"v{i}")], ["k", "v"]), None,
-            epoch_id=f"run:{i}", n_updates=1,
+            epoch_id=f"run:{i}",
         )
     t.expire_snapshots(keep_last=2, orphan_grace_sec=0)
     hist = os.path.join(str(tmp_path / "t"), "_manifests")

@@ -13,12 +13,17 @@ def _plan(df) -> str:
 
 
 def test_hwm_filter_is_broadcast(spark, log_dir):
+    from go_dcp_kafka_spark.streaming.runner import HWM_SCHEMA, _driver_frame
+
     events = read_change_log(spark, log_dir).filter(F.col("op") != "rollback")
-    hwm = spark.createDataFrame([(0, 10)], "partition_id int, hwm_seqno long")
+    hwm = _driver_frame(spark, [(0, 10)], HWM_SCHEMA)
     plan = _plan(hwm_filter(events, hwm))
     assert "BroadcastHashJoin" in plan
     # the event stream itself must not shuffle for the dedup
     assert "Exchange hashpartitioning" not in plan
+    # the watermark is a driver-local frame: no Python-RDD scan per epoch
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
 
 
 def test_merge_antijoin_broadcasts_update_keys(spark, tmp_path):
@@ -26,7 +31,7 @@ def test_merge_antijoin_broadcasts_update_keys(spark, tmp_path):
 
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), 4)
     base = spark.createDataFrame([(i, f"v{i}") for i in range(1000)], ["k", "v"])
-    t.merge(base, None, epoch_id="e0", n_updates=1000)
+    t.merge(base, None, epoch_id="e0")
     # capture the plan of the second merge's kept-rows computation
     ups = spark.createDataFrame([(1, "x")], ["k", "v"])
     m = t._load_manifest()
@@ -44,6 +49,34 @@ def test_merge_antijoin_broadcasts_update_keys(spark, tmp_path):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     # target table is NOT shuffled for the anti-join
     assert "Exchange hashpartitioning" not in plan
+
+
+def test_merge_sizes_key_broadcast_from_its_own_count(spark, tmp_path, monkeypatch):
+    """merge takes no key-count hint: the count its touched-bucket job
+    collects (upsert keys plus delete keys) is what decides the anti-join's
+    key broadcast."""
+    from go_dcp_kafka_spark.table import snapshot
+
+    t = snapshot.SnapshotTable(spark, str(tmp_path / "t"), ("k",), 4)
+    t.merge(spark.createDataFrame([(i, f"v{i}") for i in range(100)], ["k", "v"]), None, epoch_id="e0")
+    seen = []
+    real = snapshot._should_broadcast_keys
+
+    def spy(schema, n_keys):
+        seen.append(n_keys)
+        return real(schema, n_keys)
+
+    monkeypatch.setattr(snapshot, "_should_broadcast_keys", spy)
+    res = t.merge(
+        spark.createDataFrame([(1, "x"), (2, "y"), (200, "z")], ["k", "v"]),
+        spark.createDataFrame([(5,)], "k long"),
+        epoch_id="e1",
+    )
+    assert res["n_upserts"] == 4
+    assert seen == [4]
+    assert {r["k"]: r["v"] for r in t.read().filter("k in (1, 2, 5, 200)").collect()} == {
+        1: "x", 2: "y", 200: "z",
+    }
 
 
 def test_aligned_overwrite_has_no_extra_exchange(spark, log_dir, tmp_path):
@@ -196,7 +229,7 @@ def test_mor_read_resolution_is_bucket_local(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=8)
     base = spark.createDataFrame([(i, f"v{i}") for i in range(400)], ["k", "v"])
     t.overwrite(base, epoch_id="b0")
-    t.merge_mor(spark.createDataFrame([(7, "new")], ["k", "v"]), None, epoch_id="d1", n_updates=1)
+    t.merge_mor(spark.createDataFrame([(7, "new")], ["k", "v"]), None, epoch_id="d1")
     df = t.read()
     got = {r["k"]: r["v"] for r in df.collect()}
     assert len(got) == 400 and got[7] == "new" and got[8] == "v8"
@@ -238,9 +271,9 @@ def test_read_keys_resolves_mor_deltas_bucket_locally(spark, tmp_path):
 
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=8)
     t.overwrite(spark.createDataFrame([(i, f"v{i}") for i in range(400)], ["k", "v"]), epoch_id="b0")
-    t.merge_mor(spark.createDataFrame([(7, "new7")], ["k", "v"]), None, epoch_id="d1", n_updates=1)
+    t.merge_mor(spark.createDataFrame([(7, "new7")], ["k", "v"]), None, epoch_id="d1")
     t.merge_mor(None if False else spark.createDataFrame([(9, "new9")], ["k", "v"]),
-                spark.createDataFrame([(123,)], ["k"]), epoch_id="d2", n_updates=2)
+                spark.createDataFrame([(123,)], ["k"]), epoch_id="d2")
     keys = spark.createDataFrame([(7,), (9,), (123,), (55,)], ["k"])
     got = {r["k"]: r["v"] for r in t.read_keys(keys).collect()}
     assert got == {7: "new7", 9: "new9", 55: "v55"}  # 123 deleted
@@ -273,7 +306,7 @@ def test_read_changes_is_manifest_pruned(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=8)
     t.overwrite(spark.createDataFrame([(i, f"v{i}") for i in range(400)], ["k", "v"]), epoch_id="b0")
     v1 = t.version()
-    t.merge(spark.createDataFrame([(7, "new7")], ["k", "v"]), None, epoch_id="e1", n_updates=1)
+    t.merge(spark.createDataFrame([(7, "new7")], ["k", "v"]), None, epoch_id="e1")
     v2 = t.version()
     df = t.read_changes(v1, v2)
     got = [(r["k"], r["v"], r["_change"]) for r in df.collect()]
@@ -294,10 +327,10 @@ def test_read_changes_pruned_with_mor_deltas(spark, tmp_path):
 
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=8)
     t.overwrite(spark.createDataFrame([(i, f"v{i}") for i in range(400)], ["k", "v"]), epoch_id="b0")
-    t.merge_mor(spark.createDataFrame([(7, "d7")], ["k", "v"]), None, epoch_id="d1", n_updates=1)
+    t.merge_mor(spark.createDataFrame([(7, "d7")], ["k", "v"]), None, epoch_id="d1")
     v1 = t.version()
     t.merge_mor(spark.createDataFrame([(9, "d9")], ["k", "v"]),
-                spark.createDataFrame([(123,)], ["k"]), epoch_id="d2", n_updates=2)
+                spark.createDataFrame([(123,)], ["k"]), epoch_id="d2")
     v2 = t.version()
     df = t.read_changes(v1, v2)
     got = {r["k"]: (r["v"], r["_change"]) for r in df.collect()}
@@ -317,7 +350,7 @@ def test_read_changes_falls_back_across_rebucket(spark, tmp_path):
     t.overwrite(spark.createDataFrame([(i, f"v{i}") for i in range(100)], ["k", "v"]), epoch_id="b0")
     v1 = t.version()
     t.rebucket(8)
-    t.merge(spark.createDataFrame([(3, "new3")], ["k", "v"]), None, epoch_id="e1", n_updates=1)
+    t.merge(spark.createDataFrame([(3, "new3")], ["k", "v"]), None, epoch_id="e1")
     v2 = t.version()
     assert t._changed_buckets(t._manifest_at(v1), t._manifest_at(v2)) is None
     got = [(r["k"], r["v"], r["_change"]) for r in t.read_changes(v1, v2).collect()]
@@ -364,7 +397,6 @@ def test_broadcast_key_budget_row_cap():
     s = T.StructType([T.StructField("k", T.StringType())])
     assert _should_broadcast_keys(s, 10_000)
     assert not _should_broadcast_keys(s, 600_000)  # over the row cap
-    assert not _should_broadcast_keys(s, None)
 
 
 def test_read_changes_appended_delta_fast_path(spark, tmp_path):
@@ -376,7 +408,7 @@ def test_read_changes_appended_delta_fast_path(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=8)
     t.overwrite(spark.createDataFrame([(i, f"v{i}") for i in range(400)], ["k", "v"]), epoch_id="b0")
     v1 = t.version()
-    t.merge_mor(spark.createDataFrame([(7, "new7")], ["k", "v"]), None, epoch_id="d1", n_updates=1)
+    t.merge_mor(spark.createDataFrame([(7, "new7")], ["k", "v"]), None, epoch_id="d1")
     assert t._appended_delta_entries(t._manifest_at(v1), t._load_manifest()) is not None
     df = t.read_changes(v1)
     got = [(r["k"], r["v"], r["_change"]) for r in df.collect()]
@@ -387,7 +419,7 @@ def test_read_changes_appended_delta_fast_path(spark, tmp_path):
     assert 0 < n_files <= 2, f"fast path scanned {n_files} files"
     # after a compact the appended-prefix shape is gone -> generic path
     t.compact()
-    t.merge(spark.createDataFrame([(9, "c9")], ["k", "v"]), None, epoch_id="e2", n_updates=1)
+    t.merge(spark.createDataFrame([(9, "c9")], ["k", "v"]), None, epoch_id="e2")
     assert t._appended_delta_entries(t._manifest_at(v1), t._load_manifest()) is None
     got2 = {r["k"]: (r["v"], r["_change"]) for r in t.read_changes(v1).collect()}
     assert got2 == {7: ("new7", "update"), 9: ("c9", "update")}
@@ -405,12 +437,12 @@ def test_read_changes_fast_path_semantics(spark, tmp_path):
     # epoch 1: update k1, insert k10, no-op rewrite k3, delete absent k99
     t.merge_mor(
         spark.createDataFrame([(1, "b1"), (10, "b10"), (3, "a3")], ["k", "v"]),
-        spark.createDataFrame([(99,)], "k long"), epoch_id="d1", n_updates=4,
+        spark.createDataFrame([(99,)], "k long"), epoch_id="d1",
     )
     # epoch 2: re-update k1, delete the k10 just inserted, schema-add col w
     t.merge_mor(
         spark.createDataFrame([(1, "c1", "w1")], ["k", "v", "w"]),
-        spark.createDataFrame([(10,)], "k long"), epoch_id="d2", n_updates=2,
+        spark.createDataFrame([(10,)], "k long"), epoch_id="d2",
     )
     assert t._appended_delta_entries(t._manifest_at(v1), t._load_manifest()) is not None
     got = {r["k"]: (r["v"], r["w"], r["_change"]) for r in t.read_changes(v1).collect()}

@@ -127,7 +127,6 @@ def test_read_changes_replay_invariant(spark, tmp_path):
             spark.createDataFrame(list(ups.items()), ["k", "v"]),
             spark.createDataFrame([(k,) for k in dels], ["k"]) if dels else None,
             epoch_id=f"p:{e}",
-            n_updates=len(ups) + len(dels),
         )
         state.update(ups)
         for k in dels:

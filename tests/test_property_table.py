@@ -80,7 +80,7 @@ def test_table_matches_sequential_dict_fold(spark, tmp_path_factory, ops):
             else None
         )
         fn = t.merge if kind == "cow" else t.merge_mor
-        fn(up_df, del_df, epoch_id=f"p:{i}", n_updates=len(batch) + len(dels))
+        fn(up_df, del_df, epoch_id=f"p:{i}")
         for k, vw in batch.items():
             state[k] = vw
         for k in dels:
@@ -196,7 +196,7 @@ def test_renames_interleaved_with_merges_match_dict_fold(spark, tmp_path_factory
             f"k long, {names['A']} string, {names['B']} string",
         )
         fn = t.merge if kind == "cow" else t.merge_mor
-        fn(df, None, epoch_id=f"r:{i}", n_updates=len(batch))
+        fn(df, None, epoch_id=f"r:{i}")
         state.update(batch)
         present["A"] = present["B"] = True  # the merge df re-adds dropped names
     out = t.read()

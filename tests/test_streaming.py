@@ -273,6 +273,16 @@ def test_rollback_epoch_never_rescans_for_markers(spark, tmp_path, monkeypatch):
     # is invalidated; the re-streamed "new-2" survives; partition 1 untouched
     assert got == {("c0", 0): "old-1", ("c0", 1): "new-2", ("c1", 0): "p1-keep"}
     assert pipe.checkpoints.hwm_map()[0] == 2
+    # rollback truncation is its own phase, and the phases fit the total
+    phases = pipe.last_stats["phase_ms"]
+    assert "rollback" in phases
+    assert sum(v for k, v in phases.items() if k != "total") <= phases["total"]
+    # the lineage of the rollback epoch is recounted over the surviving rows
+    lin = pipe.lineage.read().set_index("partition_id")
+    p0 = lin.loc[0]
+    assert (p0["first_seqno"], p0["last_seqno"]) == (1, 2)
+    assert (p0["n_mutations"], p0["n_duplicates_dropped"]) == (2, 0)
+    assert lin.loc[1]["n_mutations"] == 1
 
 
 def test_mor_compaction_cadence_defaults(spark, tmp_path):

@@ -14,7 +14,7 @@ from go_dcp_kafka_spark.table.snapshot import SnapshotTable
 def _mk(spark, tmp_path, rows, buckets=4):
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), buckets)
     df = spark.createDataFrame(rows, ["k", "v"])
-    t.merge(df, None, epoch_id="e0", n_updates=len(rows))
+    t.merge(df, None, epoch_id="e0")
     return t
 
 
@@ -24,7 +24,7 @@ def test_merge_upsert_delete_and_bucket_pruning(spark, tmp_path):
     # upsert 3, delete 2
     ups = spark.createDataFrame([(1, "NEW"), (2, "NEW")], ["k", "v"])
     dels = spark.createDataFrame([(3,), (4,)], ["k"])
-    res = t.merge(ups, dels, epoch_id="e1", n_updates=4)
+    res = t.merge(ups, dels, epoch_id="e1")
     assert not res["skipped"]
     # only buckets containing keys 1..4 rewritten
     assert 0 < len(res["touched_buckets"]) <= 4
@@ -37,7 +37,7 @@ def test_merge_upsert_delete_and_bucket_pruning(spark, tmp_path):
 def test_schema_evolution_merge(spark, tmp_path):
     t = _mk(spark, tmp_path, [(i, f"v{i}") for i in range(10)])
     ups = spark.createDataFrame([(1, "x", "extra")], ["k", "v", "meta"])
-    t.merge(ups, None, epoch_id="e1", n_updates=1)
+    t.merge(ups, None, epoch_id="e1")
     df = t.read()
     assert "meta" in df.columns
     rows = {r["k"]: r["meta"] for r in df.collect()}
@@ -49,7 +49,7 @@ def test_expire_snapshots(spark, tmp_path):
     t = _mk(spark, tmp_path, [(i, "a") for i in range(20)])
     for e in range(3):
         ups = spark.createDataFrame([(1, f"u{e}")], ["k", "v"])
-        t.merge(ups, None, epoch_id=f"up{e}", n_updates=1)
+        t.merge(ups, None, epoch_id=f"up{e}")
     data_root = str(tmp_path / "t" / "data")
     before = len(os.listdir(data_root))
     t.expire_snapshots(keep_last=0)
@@ -125,7 +125,7 @@ def test_sink_compression_codecs(spark, tmp_path):
     rows = spark.createDataFrame([(i, f"v{i}") for i in range(100)], ["k", "v"])
     for codec, arrow_name in (("zstd", "ZSTD"), ("gzip", "GZIP"), ("snappy", "SNAPPY")):
         t = SnapshotTable(spark, str(tmp_path / codec), ("k",), 4, compression=codec)
-        t.merge(rows, None, epoch_id="e0", n_updates=100)
+        t.merge(rows, None, epoch_id="e0")
         f = glob.glob(os.path.join(str(tmp_path / codec), "data", "**", "*.parquet"), recursive=True)[0]
         meta = pq.ParquetFile(f).metadata
         assert meta.row_group(0).column(0).compression == arrow_name
@@ -186,11 +186,11 @@ def test_read_changes_incremental_scan(spark, tmp_path):
     only where values differ."""
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), 4)
     t.merge(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["k", "v"]),
-            None, epoch_id="e:1", n_updates=3)
+            None, epoch_id="e:1")
     v1 = t.version()
     dels = spark.createDataFrame([(3,)], ["k"])
     t.merge(spark.createDataFrame([(2, "B"), (4, "d")], ["k", "v"]), dels,
-            epoch_id="e:2", n_updates=3)
+            epoch_id="e:2")
     got = {r["k"]: (r["v"], r["_change"]) for r in t.read_changes(v1).collect()}
     assert got == {2: ("B", "update"), 3: (None, "delete"), 4: ("d", "insert")}
     # explicit to_version + unchanged row (k=1) stays absent
@@ -201,7 +201,7 @@ def test_read_changes_incremental_scan(spark, tmp_path):
     # schema evolution across the diff: new column arrives in v3
     t.merge(
         spark.createDataFrame([(1, "a", "x")], ["k", "v", "extra"]),
-        None, epoch_id="e:3", n_updates=1,
+        None, epoch_id="e:3",
     )
     ch = {r["k"]: (r["v"], r["extra"], r["_change"]) for r in t.read_changes(v1).collect()}
     assert ch[1] == ("a", "x", "update")   # same v, new extra value => update
@@ -235,7 +235,7 @@ def test_read_keys_equals_semi_join_across_states(spark, tmp_path):
     ups = [(f"c{i % 37}", i // 37, f"u{i}") for i in range(0, 300, 7)]
     t.merge_mor(spark.createDataFrame(ups, ["cid", "tid", "v"]),
                 spark.createDataFrame([("c1", 0), ("c2", 0)], ["cid", "tid"]),
-                epoch_id="d1", n_updates=len(ups) + 2)
+                epoch_id="d1")
     check("with-deltas")
     t.compact()
     check("post-compaction")
@@ -250,8 +250,8 @@ def test_read_changes_epoch_addressing(spark, tmp_path):
     from go_dcp_kafka_spark.table.snapshot import SnapshotTable
 
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=4)
-    t.merge(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), None, epoch_id="run:0", n_updates=2)
-    t.merge(spark.createDataFrame([(2, "b2"), (3, "c")], ["k", "v"]), None, epoch_id="run:1", n_updates=2)
+    t.merge(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), None, epoch_id="run:0")
+    t.merge(spark.createDataFrame([(2, "b2"), (3, "c")], ["k", "v"]), None, epoch_id="run:1")
     ch = {r["k"]: r["_change"] for r in t.read_changes(from_epoch="run:0").collect()}
     assert ch == {2: "update", 3: "insert"}
     by_version = {r["k"]: r["_change"] for r in t.read_changes(from_version=1).collect()}
@@ -282,11 +282,11 @@ def test_key_type_alignment_prevents_wrong_bucketing(spark, tmp_path):
     got = sorted(tuple(r) for r in t.read_keys(probe).collect())
     assert got == [(7, "v7"), (55, "v55")], got
     # long-typed COW upsert: must REPLACE, not duplicate
-    t.merge(spark.createDataFrame([(7, "new7")], "k long, v string"), None, epoch_id="e1", n_updates=1)
+    t.merge(spark.createDataFrame([(7, "new7")], "k long, v string"), None, epoch_id="e1")
     rows = {r["k"]: r["v"] for r in t.read().collect()}
     assert len(rows) == 100 and rows[7] == "new7"
     # long-typed MOR upsert: bucket-local read must still resolve it
-    t.merge_mor(spark.createDataFrame([(8, "new8")], "k long, v string"), None, epoch_id="e2", n_updates=1)
+    t.merge_mor(spark.createDataFrame([(8, "new8")], "k long, v string"), None, epoch_id="e2")
     rows = {r["k"]: r["v"] for r in t.read().collect()}
     assert len(rows) == 100 and rows[8] == "new8"
 
@@ -299,7 +299,7 @@ def test_cow_merge_never_narrows_recorded_schema(spark, tmp_path):
 
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=4)
     t.overwrite(spark.createDataFrame([(1, "a", "w1")], ["k", "v", "w"]), epoch_id="b0")
-    t.merge(spark.createDataFrame([(2, "b")], ["k", "v"]), None, epoch_id="e1", n_updates=1)
+    t.merge(spark.createDataFrame([(2, "b")], ["k", "v"]), None, epoch_id="e1")
     out = {r["k"]: (r["v"], r["w"]) for r in t.read().collect()}
     assert out == {1: ("a", "w1"), 2: ("b", None)}
 
@@ -344,7 +344,7 @@ def test_rename_column_metadata_only(spark, tmp_path):
     assert "v" in t.read(version=v1).columns
 
     # post-rename writes carry the new name; mixed-era read stays correct
-    t.merge(spark.createDataFrame([(7, "patched", 7)], ["k", "val", "w"]), None, epoch_id="e2", n_updates=1)
+    t.merge(spark.createDataFrame([(7, "patched", 7)], ["k", "val", "w"]), None, epoch_id="e2")
     got2 = {r["k"]: r["val"] for r in t.read().collect()}
     assert got2[7] == "patched" and got2[8] == "v8"
     # read_changes across the rename+merge window: exactly the merged row
@@ -357,7 +357,7 @@ def test_rename_column_metadata_only(spark, tmp_path):
 
     # contract: writing under the OLD name now is a fresh-column ADD (and an
     # upsert is a full-row replace, so unspecified columns null out)
-    t.merge(spark.createDataFrame([(3, "oldname")], ["k", "v"]), None, epoch_id="e3", n_updates=1)
+    t.merge(spark.createDataFrame([(3, "oldname")], ["k", "v"]), None, epoch_id="e3")
     rows = {r["k"]: r for r in t.read().filter("k in (3, 4)").collect()}
     assert rows[3]["v"] == "oldname" and rows[3]["val"] is None
     # untouched rows: fresh column null, renamed column's data intact
@@ -381,7 +381,7 @@ def test_rename_column_requires_compaction(spark, tmp_path):
 
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=4)
     t.overwrite(spark.createDataFrame([(1, "a")], ["k", "v"]), epoch_id="b0")
-    t.merge_mor(spark.createDataFrame([(2, "b")], ["k", "v"]), None, epoch_id="d1", n_updates=1)
+    t.merge_mor(spark.createDataFrame([(2, "b")], ["k", "v"]), None, epoch_id="d1")
     with pytest.raises(ValueError, match="compact"):
         t.rename_column("v", "val")
     t.compact()
@@ -397,7 +397,7 @@ def test_rename_column_chain(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=4)
     t.overwrite(spark.createDataFrame([(1, "x1"), (2, "x2")], ["k", "a"]), epoch_id="b0")
     t.rename_column("a", "b")
-    t.merge_mor(spark.createDataFrame([(3, "x3")], ["k", "b"]), None, epoch_id="d1", n_updates=1)
+    t.merge_mor(spark.createDataFrame([(3, "x3")], ["k", "b"]), None, epoch_id="d1")
     t.compact()
     t.rename_column("b", "c")
     assert {r["k"]: r["c"] for r in t.read().collect()} == {1: "x1", 2: "x2", 3: "x3"}
@@ -415,11 +415,11 @@ def test_rename_chain_fresh_intermediate_name(spark, tmp_path):
     t.rename_column("a", "b")
     t.rename_column("b", "c")
     # fresh, unrelated column named 'b' (the freed intermediate name)
-    t.merge(spark.createDataFrame([(3, "c3", "fresh3")], ["k", "c", "b"]), None, epoch_id="e1", n_updates=1)
+    t.merge(spark.createDataFrame([(3, "c3", "fresh3")], ["k", "c", "b"]), None, epoch_id="e1")
     rows = {r["k"]: (r["c"], r["b"]) for r in t.read().collect()}
     assert rows == {1: ("x1", None), 2: ("x2", None), 3: ("c3", "fresh3")}
     # and a fresh column under the chain's ORIGINAL name behaves the same
-    t.merge(spark.createDataFrame([(4, "c4", "orig4")], ["k", "c", "a"]), None, epoch_id="e2", n_updates=1)
+    t.merge(spark.createDataFrame([(4, "c4", "orig4")], ["k", "c", "a"]), None, epoch_id="e2")
     rows = {r["k"]: (r["c"], r["a"]) for r in t.read().collect()}
     assert rows[1] == ("x1", None) and rows[4] == ("c4", "orig4")
 
@@ -499,9 +499,9 @@ def test_drop_column_metadata_only(spark, tmp_path):
 
     # post-drop merge, then RE-ADD the name: fresh column, null for
     # pre-drop files, never the dropped data
-    t.merge(spark.createDataFrame([(7, 700)], ["k", "w"]), None, epoch_id="e1", n_updates=1)
+    t.merge(spark.createDataFrame([(7, 700)], ["k", "w"]), None, epoch_id="e1")
     t.merge(
-        spark.createDataFrame([(3, 30, "fresh3")], ["k", "w", "v"]), None, epoch_id="e2", n_updates=1
+        spark.createDataFrame([(3, 30, "fresh3")], ["k", "w", "v"]), None, epoch_id="e2"
     )
     rows = {r["k"]: (r["w"], r["v"]) for r in t.read().collect()}
     assert rows[3] == (30, "fresh3")
@@ -529,7 +529,7 @@ def test_drop_column_requires_compaction_and_chains(spark, tmp_path):
 
     t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=4)
     t.overwrite(spark.createDataFrame([(1, "a1", 1)], ["k", "a", "w"]), epoch_id="b0")
-    t.merge_mor(spark.createDataFrame([(2, "a2", 2)], ["k", "a", "w"]), None, epoch_id="d1", n_updates=1)
+    t.merge_mor(spark.createDataFrame([(2, "a2", 2)], ["k", "a", "w"]), None, epoch_id="d1")
     with pytest.raises(ValueError, match="compact"):
         t.drop_column("a")
     t.compact()
@@ -537,6 +537,6 @@ def test_drop_column_requires_compaction_and_chains(spark, tmp_path):
     t.drop_column("b")
     assert t.read().columns == ["k", "w"]
     # re-add under the ORIGINAL name after rename->drop: fresh everywhere
-    t.merge(spark.createDataFrame([(3, 3, "newa")], ["k", "w", "a"]), None, epoch_id="e1", n_updates=1)
+    t.merge(spark.createDataFrame([(3, 3, "newa")], ["k", "w", "a"]), None, epoch_id="e1")
     rows = {r["k"]: (r["w"], r["a"]) for r in t.read().collect()}
     assert rows == {1: (1, None), 2: (2, None), 3: (3, "newa")}

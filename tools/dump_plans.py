@@ -16,6 +16,7 @@ from go_dcp_kafka_spark.gen import GenConfig, generate_change_events, write_chan
 from go_dcp_kafka_spark.operators.fold import fold_change_events, hwm_filter  # noqa: E402
 from go_dcp_kafka_spark.session import get_spark  # noqa: E402
 from go_dcp_kafka_spark.sources.changelog import read_change_log  # noqa: E402
+from go_dcp_kafka_spark.streaming.runner import HWM_SCHEMA, _driver_frame  # noqa: E402
 
 
 def main() -> None:
@@ -39,12 +40,13 @@ def main() -> None:
         "non-equi condition); normalization is a post-agg projection inside the "
         "same whole-stage-codegen span.",
     )
-    hwm = spark.createDataFrame([(0, 10)], "partition_id int, hwm_seqno long")
+    hwm = _driver_frame(spark, [(0, 10)], HWM_SCHEMA)
     cap(
         "HWM duplicate filter",
         hwm_filter(ev.filter(F.col("op") != "rollback"), hwm),
-        "BroadcastHashJoin against the <=1024-row checkpoint state - the event "
-        "stream itself is never shuffled for dedup.",
+        "BroadcastHashJoin against the <=1024-row checkpoint state, built as "
+        "the epoch builds it (a driver-local LocalTableScan, no Python-RDD "
+        "scan) - the event stream itself is never shuffled for dedup.",
     )
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     cap(
@@ -132,7 +134,7 @@ def main() -> None:
     tdir = os.path.join(tempfile.mkdtemp(), "t")
     t = SnapshotTable(spark, tdir, ("k",), num_buckets=8)
     t.overwrite(spark.createDataFrame([(i, f"v{i}") for i in range(400)], ["k", "v"]), epoch_id="b0")
-    t.merge_mor(spark.createDataFrame([(7, "new")], ["k", "v"]), None, epoch_id="d1", n_updates=1)
+    t.merge_mor(spark.createDataFrame([(7, "new")], ["k", "v"]), None, epoch_id="d1")
     cap(
         "MOR read with outstanding deltas (bucket-local LWW resolution)",
         t.read(),
@@ -178,7 +180,7 @@ def main() -> None:
         spark.createDataFrame([(i, f"v{i}") for i in range(400)], ["k", "v"]), epoch_id="p0"
     )
     v1 = tbl.version()
-    tbl.merge(spark.createDataFrame([(7, "new7")], ["k", "v"]), None, epoch_id="p1", n_updates=1)
+    tbl.merge(spark.createDataFrame([(7, "new7")], ["k", "v"]), None, epoch_id="p1")
     cap(
         "Manifest-pruned incremental read_changes (one-bucket change)",
         tbl.read_changes(v1),
@@ -190,7 +192,7 @@ def main() -> None:
     )
 
     tbl.merge_mor(
-        spark.createDataFrame([(9, "d9")], ["k", "v"]), None, epoch_id="p2", n_updates=1
+        spark.createDataFrame([(9, "d9")], ["k", "v"]), None, epoch_id="p2"
     )
     cap(
         "Appended-delta read_changes fast path (the per-epoch consumer poll)",
@@ -297,7 +299,6 @@ def main() -> None:
         ),
         None,
         epoch_id="p1",
-        n_updates=1,
     )
     cap(
         "Vocabulary maintenance deltas (IVM through the tokenizer flat-map)",
